@@ -20,18 +20,21 @@ from pyspark.sql import DataFrame, SparkSession
 def write_bucketed(
     df: DataFrame,
     table_name: str,
+    path: str,
     bucket_col: str,
     num_buckets: int = 8,
     sorted_by: str | None = None,
 ) -> None:
-    """Persist ``df`` as a bucketed+sorted catalog table. At cluster
+    """Persist ``df`` as a bucketed+sorted EXTERNAL catalog table whose
+    files live at ``path`` — the caller owns their lifetime (dropping
+    the table leaves them). At cluster
     scale ``num_buckets`` is sized so one bucket ≈ one task's worth of
     data (e.g. 100 TB / 512 MB ≈ 200k buckets is too many files — in
     practice 4-16k buckets with multiple files each)."""
     writer = df.write.format("parquet").bucketBy(num_buckets, bucket_col)
     if sorted_by is not None:
         writer = writer.sortBy(sorted_by)
-    writer.mode("overwrite").saveAsTable(table_name)
+    writer.option("path", path).mode("overwrite").saveAsTable(table_name)
 
 
 def colocated_join(

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spotify_podcasts_airflow_batch_spark.artifacts import store
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
@@ -902,68 +903,55 @@ def fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # later equi-join AND aggregation on that key reads co-located
 # buckets with no exchange — at 100 TB this turns the daily
 # lineitem-orders join from two full shuffles into a pure scan.
-# The one-off bucketed write is memoized per dataset fingerprint
-# (the served-index discipline); tables are namespaced by fingerprint
-# digest so regenerated data can't serve a stale layout.
-_BUCKET_TABLE_CACHE: dict[tuple, tuple[str, str]] = {}
+# The one-off bucketed write is stored per fingerprint of lineitem +
+# orders (artifacts.store): the tables are EXTERNAL, their files under
+# the store entry, named after it — regenerated data can't serve a
+# stale layout, and the files go when the process exits.
 _BJ_BUCKETS = 8
 
 
 def bucketed_join_tables(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, str]:
-    import hashlib
+    import os
 
     from spotify_podcasts_airflow_batch_spark.operators.bucketing import (
         write_bucketed,
     )
-    from spotify_podcasts_airflow_batch_spark.sources.readers import (
-        table_fingerprint,
-    )
 
-    # keyed on a stat fingerprint of the tables this cache actually
-    # holds (lineitem + orders) — ADVICE r9: keying on the embeddings
-    # fingerprint let a regenerated lineitem serve a stale layout
-    key = (sf_dir, table_fingerprint(sf_dir, "lineitem", "orders"))
-    hit = _BUCKET_TABLE_CACHE.get(key)
-    if hit is not None and all(
-        spark.catalog.tableExists(t) for t in hit
-    ):
-        return hit
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:12]
-    li_t, o_t = f"bj_lineitem_{digest}", f"bj_orders_{digest}"
-    # a fresh session's in-memory catalog forgets the tables but the
-    # warehouse keeps their files; Spark refuses to CREATE a managed
-    # table over an existing location, so drop + clear leftovers
-    import os
-    import shutil
+    def names(root: str) -> tuple[str, str]:
+        base = os.path.basename(root)
+        return f"{base}_lineitem", f"{base}_orders"
 
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in (li_t, o_t):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    write_bucketed(
-        table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_extendedprice", "l_discount"
-        ),
-        li_t,
-        "l_orderkey",
-        _BJ_BUCKETS,
-        sorted_by="l_orderkey",
-    )
-    write_bucketed(
-        table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderpriority"
-        ),
-        o_t,
-        "o_orderkey",
-        _BJ_BUCKETS,
-        sorted_by="o_orderkey",
-    )
-    _BUCKET_TABLE_CACHE[key] = (li_t, o_t)
-    return li_t, o_t
+    def build(root: str) -> None:
+        li_t, o_t = names(root)
+        write_bucketed(
+            table(spark, sf_dir, "lineitem").select(
+                "l_orderkey", "l_extendedprice", "l_discount"
+            ),
+            li_t,
+            os.path.join(root, "lineitem"),
+            "l_orderkey",
+            _BJ_BUCKETS,
+            sorted_by="l_orderkey",
+        )
+        write_bucketed(
+            table(spark, sf_dir, "orders").select(
+                "o_orderkey", "o_orderpriority"
+            ),
+            o_t,
+            os.path.join(root, "orders"),
+            "o_orderkey",
+            _BJ_BUCKETS,
+            sorted_by="o_orderkey",
+        )
+
+    # a new session's catalog forgets tables the store still holds
+    def registered(root: str) -> bool:
+        return all(spark.catalog.tableExists(t) for t in names(root))
+
+    root = store("bj", sf_dir, ("lineitem", "orders"), build, registered)
+    return names(root)
 
 
 @register(

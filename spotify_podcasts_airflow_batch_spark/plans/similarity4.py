@@ -50,14 +50,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spotify_podcasts_airflow_batch_spark.artifacts import store
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
 from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
     _EMBED_DIMS,
     _IVFPQ_K,
     _IVFPQ_MOD,
     _IVFPQ_NPROBE,
-    _embeddings_fingerprint,
-    _index_store_root,
     _ivf_lloyd_sql,
     _ivfpq_encoded,
     _ivfpq_serve,
@@ -71,8 +70,6 @@ from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
 _INC_WAVES = 3  # day-0 base + two daily append batches
 _INC_TOMB_MOD = 7  # tombstone base rows with vec_id % 7 == 0
-
-_INC_STORE_CACHE: dict[tuple, str] = {}
 
 _SERVE_SCHEMA = "query_id bigint, rank int, vec_id bigint, adc_dist double"
 
@@ -165,33 +162,28 @@ def ivfpq_incremental_store(spark: SparkSession, sf_dir: str) -> str:
     the fixture every D39/D39b/D40/D41 query serves from. Memoized
     per dataset fingerprint like the other served indexes; building
     is deterministic, so the memo can never change a result."""
-    import hashlib
 
-    key = (_embeddings_fingerprint(sf_dir), "ivfpq_inc")
-    path = _INC_STORE_CACHE.get(key)
-    if path is not None and _store_is_valid(path):
-        return path
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    root = os.path.join(_index_store_root(), f"ivfpq_inc_{digest}")
-    emb = _emb(spark, sf_dir, fan_out="force")
-    build_base_store(spark, sf_dir, _wave(emb, 0), root)
-    cents, cells = _load_artifacts(root)
-    if cents and cents[0] and cells:
-        # deletes arrive after day 0: tombstone, never rewrite
-        tombstone_ids(
-            spark,
-            root,
-            _wave(emb, 0).where(F.col("vec_id") % _INC_TOMB_MOD == 0),
-        )
-        for w in range(1, _INC_WAVES):
-            append_batch(spark, root, _wave(emb, w), epoch=w)
-    _INC_STORE_CACHE[key] = root
-    return root
+    def build(root: str) -> None:
+        emb = _emb(spark, sf_dir, fan_out="force")
+        build_base_store(spark, sf_dir, _wave(emb, 0), root)
+        cents, cells = _load_artifacts(root)
+        if cents and cents[0] and cells:
+            # deletes arrive after day 0: tombstone, never rewrite
+            tombstone_ids(
+                spark,
+                root,
+                _wave(emb, 0).where(F.col("vec_id") % _INC_TOMB_MOD == 0),
+            )
+            for w in range(1, _INC_WAVES):
+                append_batch(spark, root, _wave(emb, w), epoch=w)
+
+    return store(
+        "ivfpq_inc", sf_dir, ("embeddings",), build, valid=_store_is_valid
+    )
 
 
 def _store_is_valid(root: str) -> bool:
-    """Memoized-path validation before serving (the ADVICE r6
-    dangling-read lesson from materialized_index_path): a store is
+    """The stores' validity hook (artifacts.store): a store is
     servable when its artifacts exist AND — for a non-empty corpus —
     its segment write committed (_SUCCESS). An externally-removed
     segments dir must trigger a rebuild, not a dangling read."""
@@ -458,49 +450,47 @@ def ivfpq_retrained_store(spark: SparkSession, sf_dir: str) -> str:
     pointer serves (post-cutover: the retrained one). Memoized like
     the other served indexes; deterministic build, so the memo can
     never change a result."""
-    import hashlib
 
-    key = (_embeddings_fingerprint(sf_dir), "ivfpq_retrained")
-    vroot = _INC_STORE_CACHE.get(key)
-    if vroot is not None:
+    def build(vroot: str) -> None:
+        root = ivfpq_incremental_store(spark, sf_dir)
+        # blue: the incremental store keeps serving while retrain builds
+        write_current_pointer(vroot, root)
+        cents, cells = _load_artifacts(root)
+        if cents and cents[0] and cells:
+            new = os.path.join(vroot, "v001")
+            retrain_store(spark, sf_dir, root, new)
+            # green: one atomic pointer swap; blue stays for rollback
+            write_current_pointer(vroot, new)
+
+    def pointer_is_valid(vroot: str) -> bool:
         cur = read_current_pointer(vroot)
-        if cur is not None and _store_is_valid(cur):
-            return cur
-    root = ivfpq_incremental_store(spark, sf_dir)
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    vroot = os.path.join(_index_store_root(), f"ivfpq_ver_{digest}")
-    # blue: the incremental store keeps serving while retrain builds
-    write_current_pointer(vroot, root)
-    cents, cells = _load_artifacts(root)
-    if cents and cents[0] and cells:
-        new = os.path.join(vroot, "v001")
-        retrain_store(spark, sf_dir, root, new)
-        # green: one atomic pointer swap; blue stays for rollback
-        write_current_pointer(vroot, new)
-    _INC_STORE_CACHE[key] = vroot
+        return cur is not None and _store_is_valid(cur)
+
+    vroot = store(
+        "ivfpq_retrained", sf_dir, ("embeddings",), build,
+        valid=pointer_is_valid,
+    )
     return read_current_pointer(vroot)
 
 
 def ivfpq_compacted_store(spark: SparkSession, sf_dir: str) -> str:
-    key = (_embeddings_fingerprint(sf_dir), "ivfpq_inc_compact")
-    path = _INC_STORE_CACHE.get(key)
-    if path is not None and _store_is_valid(path):
-        return path
-    root = ivfpq_incremental_store(spark, sf_dir)
-    out = root + "_compact"
-    cents, cells = _load_artifacts(root)
-    if cents and cents[0] and cells:
-        compact_store(spark, root, out)
-    else:
+    def build(out: str) -> None:
         import shutil
 
-        os.makedirs(out, exist_ok=True)
-        shutil.copyfile(
-            os.path.join(root, "artifacts.json"),
-            os.path.join(out, "artifacts.json"),
-        )
-    _INC_STORE_CACHE[key] = out
-    return out
+        root = ivfpq_incremental_store(spark, sf_dir)
+        cents, cells = _load_artifacts(root)
+        if cents and cents[0] and cells:
+            compact_store(spark, root, out)
+        else:
+            shutil.copyfile(
+                os.path.join(root, "artifacts.json"),
+                os.path.join(out, "artifacts.json"),
+            )
+
+    return store(
+        "ivfpq_inc_compact", sf_dir, ("embeddings",), build,
+        valid=_store_is_valid,
+    )
 
 
 # ------------------------------------------------------------ oracles
@@ -978,20 +968,14 @@ def ivfpq_streamed_store(spark: SparkSession, sf_dir: str) -> str:
     epoch-value-agnostic (the live index unions epoch segments), so
     the result does not depend on micro-batch boundaries."""
     import glob
-    import hashlib
     import shutil
 
-    key = (_embeddings_fingerprint(sf_dir), "ivfpq_streamed")
-    path = _INC_STORE_CACHE.get(key)
-    if path is not None and _store_is_valid(path):
-        return path
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    root = os.path.join(_index_store_root(), f"ivfpq_stream_{digest}")
-    shutil.rmtree(root, ignore_errors=True)
-    emb = _emb(spark, sf_dir, fan_out="force")
-    build_base_store(spark, sf_dir, _wave(emb, 0), root)
-    cents, cells = _load_artifacts(root)
-    if cents and cents[0] and cells:
+    def build(root: str) -> None:
+        emb = _emb(spark, sf_dir, fan_out="force")
+        build_base_store(spark, sf_dir, _wave(emb, 0), root)
+        cents, cells = _load_artifacts(root)
+        if not (cents and cents[0] and cells):
+            return
         tombstone_ids(
             spark,
             root,
@@ -1023,8 +1007,11 @@ def ivfpq_streamed_store(spark: SparkSession, sf_dir: str) -> str:
                 raise RuntimeError(
                     "ivfpq_streamed_store: ingest stream did not drain"
                 )
-    _INC_STORE_CACHE[key] = root
-    return root
+
+    return store(
+        "ivfpq_streamed", sf_dir, ("embeddings",), build,
+        valid=_store_is_valid,
+    )
 
 
 @register(

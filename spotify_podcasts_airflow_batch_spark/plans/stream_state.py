@@ -30,13 +30,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spotify_podcasts_airflow_batch_spark.artifacts import store
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
-from spotify_podcasts_airflow_batch_spark.sources.readers import (
-    table,
-    table_fingerprint,
-)
-
-_STATE_CACHE: dict[tuple, str] = {}
+from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
 _STATE_SCHEMA = (
     "user_id bigint, latest_ts timestamp, latest_event_id bigint, "
@@ -48,12 +44,6 @@ def _latest_state_store(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per dataset fingerprint) the streamed current-state
     table for ``sf_dir``'s events and return its root; ``state/`` under
     it holds the bucketed table (absent when the stream saw no rows)."""
-    import hashlib
-    import shutil
-
-    from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
-        _index_store_root,
-    )
     from spotify_podcasts_airflow_batch_spark.streaming.sinks import (
         stream_upsert_latest,
     )
@@ -61,34 +51,29 @@ def _latest_state_store(spark: SparkSession, sf_dir: str) -> str:
         read_events_stream,
     )
 
-    key = (table_fingerprint(sf_dir, "events"), "stream_latest")
-    hit = _STATE_CACHE.get(key)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    root = os.path.join(_index_store_root(), f"stream_state_{digest}")
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    src = os.path.join(root, "src")
-    ev = table(spark, sf_dir, "events")
-    # two parity-split files → two micro-batches with interleaved
-    # users, so batch 2 exercises the UPDATE path of the upsert
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q = stream_upsert_latest(
-        read_events_stream(spark, src, max_files_per_trigger=1),
-        os.path.join(root, "state"),
-        os.path.join(root, "ckpt"),
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(
-            "_latest_state_store: upsert stream did not drain"
+    def build(root: str) -> None:
+        src = os.path.join(root, "src")
+        ev = table(spark, sf_dir, "events")
+        # two parity-split files → two micro-batches with interleaved
+        # users, so batch 2 exercises the UPDATE path of the upsert
+        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
+            src
         )
-    _STATE_CACHE[key] = root
-    return root
+        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        q = stream_upsert_latest(
+            read_events_stream(spark, src, max_files_per_trigger=1),
+            os.path.join(root, "state"),
+            os.path.join(root, "ckpt"),
+        )
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError(
+                "_latest_state_store: upsert stream did not drain"
+            )
+
+    return store("stream_latest", sf_dir, ("events",), build)
 
 
 @register(
@@ -131,12 +116,6 @@ def _daily_table_store(spark: SparkSession, sf_dir: str) -> str:
     partitioned events table — the E6 sink (foreachBatch → the batch
     daily writer, replay-idempotent date-partition overwrites) drained
     over the same two-file micro-batch split as the E14b fixture."""
-    import hashlib
-    import shutil
-
-    from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
-        _index_store_root,
-    )
     from spotify_podcasts_airflow_batch_spark.streaming.sinks import (
         stream_to_daily_parquet,
     )
@@ -144,32 +123,27 @@ def _daily_table_store(spark: SparkSession, sf_dir: str) -> str:
         read_events_stream,
     )
 
-    key = (table_fingerprint(sf_dir, "events"), "stream_daily")
-    hit = _STATE_CACHE.get(key)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    root = os.path.join(_index_store_root(), f"stream_daily_{digest}")
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    src = os.path.join(root, "src")
-    ev = table(spark, sf_dir, "events")
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q = stream_to_daily_parquet(
-        read_events_stream(spark, src, max_files_per_trigger=1),
-        os.path.join(root, "daily"),
-        os.path.join(root, "ckpt"),
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(
-            "_daily_table_store: daily-sink stream did not drain"
+    def build(root: str) -> None:
+        src = os.path.join(root, "src")
+        ev = table(spark, sf_dir, "events")
+        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
+            src
         )
-    _STATE_CACHE[key] = root
-    return root
+        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        q = stream_to_daily_parquet(
+            read_events_stream(spark, src, max_files_per_trigger=1),
+            os.path.join(root, "daily"),
+            os.path.join(root, "ckpt"),
+        )
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError(
+                "_daily_table_store: daily-sink stream did not drain"
+            )
+
+    return store("stream_daily", sf_dir, ("events",), build)
 
 
 @register(
@@ -222,12 +196,8 @@ def _closed_sessions_store(spark: SparkSession, sf_dir: str) -> str:
     streaming/stateful.py): events streamed with a 0-second watermark,
     sessions emitted on gap-close inline or timer-close when the
     watermark passes last_ts + gap, parquet file sink."""
-    import hashlib
     import shutil
 
-    from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
-        _index_store_root,
-    )
     from spotify_podcasts_airflow_batch_spark.streaming.stateful import (
         finalize_sessions,
     )
@@ -235,40 +205,33 @@ def _closed_sessions_store(spark: SparkSession, sf_dir: str) -> str:
         read_events_stream,
     )
 
-    key = (table_fingerprint(sf_dir, "events"), "stream_sessions")
-    hit = _STATE_CACHE.get(key)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    root = os.path.join(_index_store_root(), f"stream_sess_{digest}")
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    src = os.path.join(root, "src")
-    os.makedirs(src, exist_ok=True)
-    ev_file = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(ev_file):
-        shutil.copytree(ev_file, os.path.join(src, "events.parquet"))
-    else:
-        shutil.copy(ev_file, os.path.join(src, "events.parquet"))
-    stream = read_events_stream(spark, src).withWatermark(
-        "ts", "0 seconds"
-    )
-    q = (
-        finalize_sessions(stream)
-        .writeStream.format("parquet")
-        .option("path", os.path.join(root, "sessions"))
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(
-            "_closed_sessions_store: session stream did not drain"
+    def build(root: str) -> None:
+        src = os.path.join(root, "src")
+        os.makedirs(src, exist_ok=True)
+        ev_file = os.path.join(sf_dir, "events.parquet")
+        if os.path.isdir(ev_file):
+            shutil.copytree(ev_file, os.path.join(src, "events.parquet"))
+        else:
+            shutil.copy(ev_file, os.path.join(src, "events.parquet"))
+        stream = read_events_stream(spark, src).withWatermark(
+            "ts", "0 seconds"
         )
-    _STATE_CACHE[key] = root
-    return root
+        q = (
+            finalize_sessions(stream)
+            .writeStream.format("parquet")
+            .option("path", os.path.join(root, "sessions"))
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError(
+                "_closed_sessions_store: session stream did not drain"
+            )
+
+    return store("stream_sessions", sf_dir, ("events",), build)
 
 
 @register(
@@ -354,12 +317,6 @@ def _enriched_store(spark: SparkSession, sf_dir: str) -> str:
     table: the events stream broadcast-joined to the static customer →
     nation dimension chain per micro-batch (E4, streaming/enrich.py),
     parquet file sink."""
-    import hashlib
-    import shutil
-
-    from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
-        _index_store_root,
-    )
     from spotify_podcasts_airflow_batch_spark.streaming.enrich import (
         enrich_stream,
     )
@@ -367,50 +324,49 @@ def _enriched_store(spark: SparkSession, sf_dir: str) -> str:
         read_events_stream,
     )
 
-    key = (table_fingerprint(sf_dir, "events"), "stream_enrich")
-    hit = _STATE_CACHE.get(key)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    root = os.path.join(_index_store_root(), f"stream_enrich_{digest}")
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    src = os.path.join(root, "src")
-    ev = table(spark, sf_dir, "events")
-    # two micro-batches: the dim side must be re-broadcast per batch
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    dim = (
-        table(spark, sf_dir, "customer")
-        .join(
-            table(spark, sf_dir, "nation"),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-            "left",
+    def build(root: str) -> None:
+        src = os.path.join(root, "src")
+        ev = table(spark, sf_dir, "events")
+        # two micro-batches: the dim side must be re-broadcast per batch
+        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
+            src
         )
-        .select(
-            F.col("c_custkey").alias("user_id"), "c_name", "n_name"
+        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        dim = (
+            table(spark, sf_dir, "customer")
+            .join(
+                table(spark, sf_dir, "nation"),
+                F.col("c_nationkey") == F.col("n_nationkey"),
+                "left",
+            )
+            .select(
+                F.col("c_custkey").alias("user_id"), "c_name", "n_name"
+            )
         )
+        q = (
+            enrich_stream(
+                read_events_stream(spark, src, max_files_per_trigger=1),
+                dim,
+                on="user_id",
+            )
+            .writeStream.format("parquet")
+            .option("path", os.path.join(root, "enriched"))
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError(
+                "_enriched_store: enrich stream did not drain"
+            )
+
+    return store(
+        "stream_enrich", sf_dir, ("events", "customer", "nation"), build
     )
-    q = (
-        enrich_stream(
-            read_events_stream(spark, src, max_files_per_trigger=1),
-            dim,
-            on="user_id",
-        )
-        .writeStream.format("parquet")
-        .option("path", os.path.join(root, "enriched"))
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("_enriched_store: enrich stream did not drain")
-    _STATE_CACHE[key] = root
-    return root
 
 
 @register(

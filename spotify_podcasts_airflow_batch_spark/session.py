@@ -42,19 +42,6 @@ def get_spark(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions if shuffle_partitions else max(cpus, 32)),
         )
-        # Shuffled-hash-join opt-in (guide §3.1): when false the planner
-        # may pick ShuffledHashJoin where one side builds a per-partition
-        # hash table that fits (skipping both sorts). Env-parameterized
-        # for A/B measurement; the shipped default stays Spark's
-        # sort-merge preference — see OPTIMIZATION_r11.md for the
-        # round-11 interleaved A/B over the SMJ-bearing headline
-        # queries, and sort-merge's graceful spill is the safer default
-        # for 100 TB fact-fact joins where a skewed build-side
-        # partition would OOM a shuffled-hash build.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
         # 128 MB input splits — the parquet-side knob that keeps scan
         # tasks right-sized as files grow.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

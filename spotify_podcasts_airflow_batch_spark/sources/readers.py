@@ -16,6 +16,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spotify_podcasts_airflow_batch_spark.artifacts import memo
+
 TABLES = (
     "region",
     "nation",
@@ -73,9 +75,7 @@ def table(
     if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     if name in _CPU_HEAVY_TABLES:
-        df = _ensure_scan_parallelism(
-            spark, df, path, _CPU_HEAVY_TABLES[name], fan_out
-        )
+        df = _ensure_scan_parallelism(spark, df, sf_dir, name, fan_out)
     return df
 
 
@@ -90,8 +90,8 @@ _CPU_HEAVY_TABLES = {"documents": "doc_id", "embeddings": "vec_id"}
 def _ensure_scan_parallelism(
     spark: SparkSession,
     df: DataFrame,
-    path: str,
-    key: str,
+    sf_dir: str,
+    name: str,
     fan_out: bool | str | None = None,
 ):
     """Parquet scans parallelize across ROW GROUPS; a file written as
@@ -102,7 +102,8 @@ def _ensure_scan_parallelism(
     repartition on the unique id so CPU-heavy per-row work fans out.
     At production scale (many files / many row groups) this detects
     adequate parallelism and no-ops — the check costs one driver-side
-    footer read."""
+    footer read, once per table fingerprint."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         import pyarrow.parquet as pq
 
@@ -118,10 +119,10 @@ def _ensure_scan_parallelism(
         # against an unrelated total).
         if len(files) >= cores:
             return df
-        cached = _LAYOUT_CACHE.get(path)
-        if cached is None:
+
+        def footer_layout() -> tuple[int, int, int]:
             metas = [pq.ParquetFile(p).metadata for p in files]
-            cached = (
+            return (
                 sum(m.num_row_groups for m in metas),
                 sum(m.num_rows for m in metas),
                 sum(
@@ -130,8 +131,10 @@ def _ensure_scan_parallelism(
                     for i in range(m.num_row_groups)
                 ),
             )
-            _LAYOUT_CACHE[path] = cached
-        groups, rows, nbytes = cached
+
+        groups, rows, nbytes = memo(
+            "scan_layout", sf_dir, (name,), footer_layout
+        )
         # Only pay the exchange when each row group carries enough work
         # that serial evaluation would dominate: below ~16k rows/group
         # the shuffle usually costs more than the parallelism returns.
@@ -146,16 +149,10 @@ def _ensure_scan_parallelism(
             or fan_out == "force"
         )
         if 0 < groups < cores and trigger:
-            return df.repartition(cores, F.col(key))
+            return df.repartition(cores, F.col(_CPU_HEAVY_TABLES[name]))
     except Exception:
         pass
     return df
-
-
-# (groups, rows) per path — footer layout is immutable for the
-# driver-generated inputs, and re-probing per table() call would pay
-# file I/O three times per benched query
-_LAYOUT_CACHE: dict[str, tuple[int, int]] = {}
 
 
 def read_parquet_many(
@@ -251,27 +248,3 @@ def read_xml(
         reader = reader.schema(schema)
     return reader.load(path)
 
-
-def table_fingerprint(sf_dir: str, *names: str) -> tuple:
-    """Stat-level identity of one or more dataset tables: (path,
-    mtime_ns, size) for every data file of each named table under
-    ``sf_dir`` — the generalized form of similarity2's
-    ``_embeddings_fingerprint``, for memo keys that must cover the
-    exact tables they cache (ADVICE r9: a bucketed lineitem/orders
-    layout keyed on the *embeddings* fingerprint served stale tables
-    when lineitem was regenerated). Cheap: a stat per file, no reads."""
-    out = []
-    for name in names:
-        root = os.path.join(sf_dir, f"{name}.parquet")
-        paths = (
-            sorted(glob.glob(os.path.join(root, "*.parquet")))
-            if os.path.isdir(root)
-            else [root]
-        )
-        for p in paths:
-            try:
-                st = os.stat(p)
-                out.append((p, st.st_mtime_ns, st.st_size))
-            except OSError:
-                out.append((p, 0, 0))
-    return tuple(out)

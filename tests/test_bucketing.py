@@ -17,14 +17,19 @@ from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
 
 @pytest.fixture(scope="module")
-def bucketed_tables(spark, sf_dir):
-    # warehouse.dir is a static conf — tables land in ./spark-warehouse
-    # (gitignored) and are dropped in teardown
+def bucketed_tables(spark, sf_dir, tmp_path_factory):
+    # external tables: files live under pytest's tmp dir, the catalog
+    # entries are dropped in teardown
+    d = tmp_path_factory.mktemp("bucketed")
     orders = table(spark, sf_dir, "orders")
     lineitem = table(spark, sf_dir, "lineitem")
-    write_bucketed(orders, "b_orders", "o_orderkey", 8, sorted_by="o_orderkey")
     write_bucketed(
-        lineitem, "b_lineitem", "l_orderkey", 8, sorted_by="l_orderkey"
+        orders, "b_orders", str(d / "orders"), "o_orderkey", 8,
+        sorted_by="o_orderkey",
+    )
+    write_bucketed(
+        lineitem, "b_lineitem", str(d / "lineitem"), "l_orderkey", 8,
+        sorted_by="l_orderkey",
     )
     yield "b_lineitem", "b_orders"
     spark.sql("DROP TABLE IF EXISTS b_orders")

@@ -72,8 +72,8 @@ def test_codebook_memo_is_keyed_per_dataset(spark, sf_dir):
     for repeated calls — one training job per (process, dataset) —
     and (b) never leak a codebook across datasets or iteration
     counts."""
+    from spotify_podcasts_airflow_batch_spark.artifacts import _CACHE
     from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
-        _PQ_CB_CACHE,
         pq_train_codebook_cached,
     )
 
@@ -87,8 +87,8 @@ def test_codebook_memo_is_keyed_per_dataset(spark, sf_dir):
     # the invalidation-on-rewrite check)
     assert all(
         isinstance(k[0], tuple) and k[0] and sf_dir in k[0][0][0]
-        for k in _PQ_CB_CACHE
-        if any(sf_dir in f[0] for f in k[0])
+        for k in _CACHE
+        if k[1] == "pq_codebook" and any(sf_dir in f[0] for f in k[0])
     )
 
 
