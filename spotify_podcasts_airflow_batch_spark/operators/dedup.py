@@ -211,12 +211,23 @@ def _banded(
 
 
 def _cap_buckets(
-    banded: DataFrame, id_col: str, max_bucket: int
+    banded: DataFrame,
+    id_col: str,
+    max_bucket: int,
+    group_cols: tuple[str, ...] = ("band_id", "band_hash"),
 ) -> DataFrame:
-    """Keep the ``max_bucket`` members of every (band_id, band_hash)
-    bucket with the smallest per-bucket universal hash (id tiebreak),
-    via the salted two-stage window so a hot bucket never lands in one
-    task. Deterministic and SQL-reproducible."""
+    """Keep the ``max_bucket`` members of every ``group_cols`` bucket
+    with the smallest per-bucket universal hash
+    md5_31('lshcap:'||band_id||':'||band_hash||':'||id) (id tiebreak).
+    ``group_cols`` must include band_id and band_hash; a caller that
+    banded several LSH settings at once adds its setting column so
+    buckets of different settings never mix (the hash does not change,
+    so each setting keeps the members its own capped plan would).
+
+    It runs the salted two-stage window so a hot bucket never lands in
+    one task: ``max_bucket`` comes from the caller and may exceed
+    Spark's window group-limit threshold, where ``topk_per_group``
+    would get no partial limit. Deterministic and SQL-reproducible."""
     from pyspark.sql import Window
 
     hk = md5_hash31(
@@ -230,13 +241,9 @@ def _cap_buckets(
         )
     )
     salted = Window.partitionBy(
-        "band_id",
-        "band_hash",
-        F.pmod(F.col(id_col), F.lit(_LSH_CAP_SALTS)),
+        *group_cols, F.pmod(F.col(id_col), F.lit(_LSH_CAP_SALTS))
     ).orderBy("__hk", id_col)
-    final = Window.partitionBy("band_id", "band_hash").orderBy(
-        "__hk", id_col
-    )
+    final = Window.partitionBy(*group_cols).orderBy("__hk", id_col)
     return (
         banded.withColumn("__hk", hk)
         .withColumn("__srn", F.row_number().over(salted))

@@ -31,6 +31,20 @@ def topk_per_group(
     so results are reproducible run-to-run — the driver-side enumerate
     in the reference was deterministic only because the API returned a
     pre-sorted list.
+
+    This is the package's one per-group top-k with a fixed ``k``.
+    Contract: ``k`` is a literal int no larger than
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000),
+    and the ``<= k`` filter sits directly on the ``row_number`` column
+    (as built here).
+    Spark then plans a ``WindowGroupLimit`` in ``Partial`` mode BEFORE
+    the group-key exchange: each map task keeps at most ``k`` rows per
+    group, so no task ever holds a hot group's whole input and the
+    shuffle carries at most tasks × groups × k rows; no salt is needed.
+
+    ``capped_top_q`` remains for quotas that break the contract: a
+    caller-supplied quota may exceed the threshold, and then Spark
+    inserts no limit node, so only the salt bounds the per-task sort.
     """
     w = Window.partitionBy(*group_cols).orderBy(*order_by)
     return (
@@ -47,14 +61,10 @@ def latest_per_key(
     """Keep the single most-recent row per key (daily-updated-dataset
     semantics — the reference republishes the full consolidated CSV to
     Kaggle daily, implicitly keeping the latest version per episode;
-    ``kaggle_update_dag.py``). One shuffle on the key; map-side nothing
-    to pre-aggregate since whole rows are kept."""
-    w = Window.partitionBy(*key_cols).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    ``kaggle_update_dag.py``). ``topk_per_group`` with ``k = 1``: the
+    partial group limit keeps one row per key per map task before the
+    key shuffle."""
+    return topk_per_group(df, key_cols, order_by, 1, "__rn").drop("__rn")
 
 
 def capped_top_q(
@@ -67,9 +77,12 @@ def capped_top_q(
 ) -> DataFrame:
     """Skew-safe per-group quota cap: keep each group's top ``quota``
     rows under ``order_by`` (which must be a total order), equivalent
-    to a plain row_number window + filter for ANY input.
+    to a plain row_number window + filter for ANY input. Use it only
+    when ``quota`` comes from a caller and may exceed Spark's window
+    group-limit threshold; a fixed small ``k`` goes through
+    ``topk_per_group``.
 
-    Shape (SURVEY §2 C39): groups within quota are identified by a
+    Shape: groups within quota are identified by a
     cheap count aggregate and pass through on a broadcast anti join —
     they never enter a window. Over-quota groups are first cut to a
     per-salt top-Q (salt = ``salt_source`` mod ``salts``), so the

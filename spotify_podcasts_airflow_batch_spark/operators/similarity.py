@@ -16,12 +16,15 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spotify_podcasts_airflow_batch_spark.functions.vectors import (
     dot,
     l2_normalized,
+)
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    topk_per_group,
 )
 
 NUM_PLANES = 8
@@ -38,6 +41,12 @@ NUM_PLANES = 8
 # divisions that also yield NULL, so each pairing is internally
 # consistent.)
 ZERO_NORM_COS = -1.0
+
+
+def _by_cos() -> list[Column]:
+    """Neighbor order of every cosine top-k here: rounded cosine desc,
+    then id — the cross-engine-reproducible tie discipline."""
+    return [F.round(F.col("cos_raw"), 6).desc(), F.col("neighbor_id")]
 
 
 def unit_rows(X):
@@ -211,18 +220,11 @@ def knn_brute_force(
     scored = corpus.select(id_col, vec_col).mapInPandas(
         score, schema="query_id long, neighbor_id long, cos_raw double"
     ).where(F.col("neighbor_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos_raw"), 6).desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("cos_raw"), 4).alias("cos_sim"),
-            "rank",
-        )
+    return topk_per_group(scored, ["query_id"], _by_cos(), k).select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.col("cos_raw"), 4).alias("cos_sim"),
+        "rank",
     )
 
 
@@ -255,14 +257,13 @@ def ivf_assign(
     scored = df.crossJoin(cents).withColumn(
         "cell_cos", dot(F.col(vc), F.col("cvec_cent"))
     )
-    w = Window.partitionBy(idc).orderBy(
-        F.round(F.col("cell_cos"), 6).desc(), F.col("cell_id")
-    )
-    return (
-        scored.withColumn("__cr", F.row_number().over(w))
-        .where(F.col("__cr") <= n)
-        .drop("cvec_cent", "cell_cos")
-    )
+    return topk_per_group(
+        scored,
+        [idc],
+        [F.round(F.col("cell_cos"), 6).desc(), F.col("cell_id")],
+        n,
+        "__cr",
+    ).drop("cvec_cent", "cell_cos")
 
 
 def ivf_knn(
@@ -305,18 +306,11 @@ def ivf_knn(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos_raw", dot(F.col("qvec"), F.col("cvec")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos_raw"), 6).desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("cos_raw"), 4).alias("cos_sim"),
-            "rank",
-        )
+    return topk_per_group(scored, ["query_id"], _by_cos(), k).select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.col("cos_raw"), 4).alias("cos_sim"),
+        "rank",
     )
 
 
@@ -348,18 +342,11 @@ def knn_lsh(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos_raw", dot(F.col("qvec"), F.col("cvec")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos_raw"), 6).desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("cos_raw"), 4).alias("cos_sim"),
-            "rank",
-        )
+    return topk_per_group(scored, ["query_id"], _by_cos(), k).select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.col("cos_raw"), 4).alias("cos_sim"),
+        "rank",
     )
 
 
@@ -432,26 +419,22 @@ def knn_hamming_rerank(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("hamming", ham)
     )
-    w_ham = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id")
-    )
-    shortlist = (
-        cand.withColumn("__hr", F.row_number().over(w_ham))
-        .where(F.col("__hr") <= rerank)
-        .drop("__hr")
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos_raw"), 6).desc(), F.col("neighbor_id")
-    )
-    return (
-        shortlist.withColumn("cos_raw", dot(F.col("qvec"), F.col("cvec")))
-        .withColumn("rank", F.row_number().over(w_cos))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "hamming",
-            F.round(F.col("cos_raw"), 4).alias("cos_sim"),
-            "rank",
-        )
+    shortlist = topk_per_group(
+        cand,
+        ["query_id"],
+        [F.col("hamming").asc(), F.col("neighbor_id")],
+        rerank,
+        "__hr",
+    ).drop("__hr")
+    return topk_per_group(
+        shortlist.withColumn("cos_raw", dot(F.col("qvec"), F.col("cvec"))),
+        ["query_id"],
+        _by_cos(),
+        k,
+    ).select(
+        "query_id",
+        "neighbor_id",
+        "hamming",
+        F.round(F.col("cos_raw"), 4).alias("cos_sim"),
+        "rank",
     )

@@ -16,6 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    topk_per_group,
+)
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
@@ -461,12 +464,9 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     t = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     vc = t.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-    w = Window.orderBy(F.col("c").desc(), F.col("tok"))
-    v = (
-        vc.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= _VOCAB_K)
-        .select("tok", F.lit(True).alias("in_vocab"))
-    )
+    v = topk_per_group(
+        vc, [], [F.col("c").desc(), F.col("tok")], _VOCAB_K
+    ).select("tok", F.lit(True).alias("in_vocab"))
     oov = F.when(F.col("in_vocab").isNull(), 1).otherwise(0)
     return (
         t.join(F.broadcast(v), "tok", "left")

@@ -14,6 +14,9 @@ from pyspark.sql import functions as F
 from spotify_podcasts_airflow_batch_spark.functions.hashing import (
     oracle_hash31,
 )
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    topk_per_group,
+)
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
@@ -99,17 +102,20 @@ def dtw_behavior_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     def side(etype: str, out: str) -> DataFrame:
         # cap window, count window and the groupBy all partition on
         # user_id, so each side is ONE exchange end-to-end
-        per_user = Window.partitionBy("user_id")
-        by_hash = per_user.orderBy(
-            md5_hash60(F.col("event_id").cast("string")), F.col("event_id")
-        )
-        return (
+        rows = (
             table(spark, sf_dir, "events")
             .select(*cols)
             .where(F.col("event_type") == etype)
-            .withColumn("side_total", F.count("*").over(per_user))
-            .withColumn("hrn", F.row_number().over(by_hash))
-            .where(F.col("hrn") <= _DTW_CAP)
+            .withColumn(
+                "side_total",
+                F.count("*").over(Window.partitionBy("user_id")),
+            )
+        )
+        by_hash = [
+            md5_hash60(F.col("event_id").cast("string")), F.col("event_id")
+        ]
+        return (
+            topk_per_group(rows, ["user_id"], by_hash, _DTW_CAP, "hrn")
             .groupBy("user_id")
             .agg(
                 F.transform(

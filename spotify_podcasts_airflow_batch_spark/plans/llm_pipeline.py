@@ -25,6 +25,9 @@ from spotify_podcasts_airflow_batch_spark.functions.text import (
     tokens,
     word_shingles,
 )
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    topk_per_group,
+)
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
@@ -1244,14 +1247,10 @@ def corpus_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     bottom-k aggregate (each task keeps k, merge keeps k), which AQE's
     window-group-limit pushdown already approximates (rank predicate
     pushed below the sort)."""
-    from pyspark.sql import Window
-
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents").select("doc_id", "source")
     h = md5_hash31(F.concat(F.lit("sample:"), F.col("doc_id").cast("string")))
-    w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
-    return (
-        d.select("doc_id", "source", F.row_number().over(w).alias("rk"))
-        .where(F.col("rk") <= _SAMPLE_K)
+    return topk_per_group(
+        d, ["source"], [h.asc(), F.col("doc_id").asc()], _SAMPLE_K, "rk"
     )
 
 

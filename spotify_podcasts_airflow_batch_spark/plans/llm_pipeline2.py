@@ -28,7 +28,6 @@ from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
 # ---------------------------------------------------------------- C39
 _QUOTA = 6  # max docs kept per (source, lang) group
-_QUOTA_SALTS = 4  # first-stage fan-out for hot groups
 
 
 @register(
@@ -47,41 +46,27 @@ _QUOTA_SALTS = 4  # first-stage fan-out for hot groups
     """,
 )
 def domain_quota_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C39 — cap each (source, lang) group at the {quota} best documents
+    """C39 — cap each (source, lang) group at the Q best documents
     (longest first, doc_id tiebreak): the per-domain quota every crawl
     pipeline applies so one hot domain can't dominate the corpus.
 
     Scale design: a naive row_number window sorts EVERY group, and at
-    100 TB the hot domain's group lands on one task. Here only
-    over-quota groups (found by a cheap count-aggregate, broadcast
-    back) enter the window at all — within-quota groups pass through
-    untouched — and the over-quota rows are first cut to a per-salt
-    top-Q (salt = doc_id mod {salts}), so the final per-group sort sees
-    at most {salts}×Q rows per group no matter how hot the domain is.
-    The global top-Q is always contained in the union of per-salt
-    top-Qs, so the two-stage cut is exact.
+    100 TB the hot domain's group lands on one task. ``topk_per_group``
+    with the literal quota plans a partial ``WindowGroupLimit`` before
+    the (source, lang) exchange, so each map task forwards at most Q
+    rows per group and the final per-group sort sees at most tasks×Q
+    rows no matter how hot the domain is.
     """
     from spotify_podcasts_airflow_batch_spark.operators.ranking import (
-        capped_top_q,
+        topk_per_group,
     )
 
-    # persist: capped_top_q makes three passes over its input (the
-    # over-quota group count, the anti join, the semi join) whose
-    # lineages end in different exchanges — without it the documents
-    # scan runs 4× (2 wide + 2 group-cols-only scans in the round-11
-    # before-plan). The cached projection is 4 scalar columns.
-    d = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "source", "lang", "n_chars")
-        .persist()
-    )
-    return capped_top_q(
+    d = table(spark, sf_dir, "documents")
+    return topk_per_group(
         d,
-        group_cols=("source", "lang"),
-        order_by=[F.col("n_chars").desc(), F.col("doc_id")],
-        quota=_QUOTA,
-        salt_source=F.col("doc_id"),
-        salts=_QUOTA_SALTS,
+        ["source", "lang"],
+        [F.col("n_chars").desc(), F.col("doc_id")],
+        _QUOTA,
     ).select("doc_id", "source", "lang", "n_chars")
 
 
@@ -878,8 +863,10 @@ def stratified_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined and dimension-sized; the allocation table broadcasts;
     the per-stratum rank runs a salted two-stage window (per-salt cut
     to the stratum's quota first, so the final per-stratum sort sees
-    <= salts x alloc rows no matter how hot the stratum — the exact
-    C39 containment argument).
+    <= salts x alloc rows no matter how hot the stratum; the global
+    top-alloc lies in the union of per-salt top-allocs, so the cut is
+    exact). It stays salted because its limit is the ``alloc`` column,
+    not a literal, so Spark can plan no ``WindowGroupLimit`` for it.
     """
     from pyspark.sql import Window
 

@@ -4,6 +4,14 @@ Each capability from SURVEY.md §2 registers here as a named query:
 a ``(spark, sf_dir) -> DataFrame`` callable plus (where expressible)
 the equivalent ANSI SQL a DuckDB oracle can run on the same parquet
 tables. ``__spark_entry__`` exposes the registry to the driver.
+
+Caching contract: a plan function may ``persist()`` intermediates it
+reads more than once (``permutation_test`` and ``bh_fdr_screen``
+persist their small rollups) and does not unpersist them, since the
+returned DataFrame is still lazy. Callers that run several queries
+in one session run ``spark.catalog.clearCache()`` between queries,
+as ``perfbench/workloads.py`` and the test fixtures do; otherwise
+cached relations accumulate in executor storage.
 """
 
 from __future__ import annotations

@@ -7,6 +7,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    topk_per_group,
+)
 from spotify_podcasts_airflow_batch_spark.operators.similarity import (
     knn_brute_force,
     knn_lsh,
@@ -250,8 +253,6 @@ def ivf_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-setting top-k then runs as one window partitioned by
     (nprobe, query_id). No corpus self-join anywhere; the report is
     |settings| rows."""
-    from pyspark.sql import Window
-
     from spotify_podcasts_airflow_batch_spark.functions.vectors import (
         dot,
         l2_normalized,
@@ -319,14 +320,12 @@ def ivf_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(settings))
         .where(F.col("cr") <= F.col("nprobe"))
     )
-    wk = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.round(F.col("cos_raw"), 6).desc(), F.col("neighbor_id")
-    )
-    cand = (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= _IVF_SWEEP_K)
-        .select("nprobe", "query_id", "neighbor_id")
-    )
+    cand = topk_per_group(
+        scored,
+        ["nprobe", "query_id"],
+        [F.round(F.col("cos_raw"), 6).desc(), F.col("neighbor_id")],
+        _IVF_SWEEP_K,
+    ).select("nprobe", "query_id", "neighbor_id")
     hits = cand.join(exact, ["query_id", "neighbor_id"]).groupBy(
         "nprobe"
     ).agg(F.count(F.lit(1)).alias("n_hits"))

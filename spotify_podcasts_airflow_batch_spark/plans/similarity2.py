@@ -16,6 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spotify_podcasts_airflow_batch_spark.artifacts import memo, store
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    topk_per_group,
+)
 from spotify_podcasts_airflow_batch_spark.operators.similarity import (
     blocked_allpairs_cosine,
     knn_brute_force,
@@ -441,16 +444,9 @@ def knn_label_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "nlabel")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("n"), F.asc("nlabel")
-    )
-    pred = (
-        votes.withColumn("r", F.row_number().over(w))
-        .where(F.col("r") == 1)
-        .select("query_id", F.col("nlabel").alias("pred_label"))
-    )
+    pred = topk_per_group(
+        votes, ["query_id"], [F.desc("n"), F.asc("nlabel")], 1
+    ).select("query_id", F.col("nlabel").alias("pred_label"))
     truth = e.select(
         F.col("vec_id").alias("query_id"), F.col("label").alias("true_label")
     )
@@ -607,8 +603,6 @@ def ann_jl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     |probes|x50 rows. Both engines rank the IDENTICAL rounded sketch
     values through the same explicit dot/norm arithmetic — no float
     path is engine-local."""
-    from pyspark.sql import Window
-
     e = table(spark, sf_dir, "embeddings")
     sk = random_projection_jl(spark, sf_dir)
     probes_sk = sk.where(F.col("vec_id") % _PROBE_MOD == 0)
@@ -628,16 +622,12 @@ def ann_jl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos_sk = F.when(
         (qn > 0) & (cn > 0), dot / (F.sqrt(qn) * F.sqrt(cn))
     ).otherwise(F.lit(-2.0))
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(cos_sk, 6).desc(), F.col("neighbor_id")
-    )
-    cand = (
-        F.broadcast(q)
-        .join(c, F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("r", F.row_number().over(w))
-        .where(F.col("r") <= _JL_CAND)
-        .select("query_id", "neighbor_id")
-    )
+    cand = topk_per_group(
+        F.broadcast(q).join(c, F.col("neighbor_id") != F.col("query_id")),
+        ["query_id"],
+        [F.round(cos_sk, 6).desc(), F.col("neighbor_id")],
+        _JL_CAND,
+    ).select("query_id", "neighbor_id")
     exact = knn_brute_force(
         corpus=e,
         queries=e.where(F.col("vec_id") % _PROBE_MOD == 0),
@@ -666,7 +656,6 @@ _PQ_SUB = _EMBED_DIMS // _PQ_M  # dims per subspace
 _PQ_K = 16  # centroids per subspace (4-bit codes)
 _PQ_NQ = 4  # probe queries (smallest vec_ids)
 _PQ_TOPK = 5
-_PQ_SALTS = 32  # first-stage top-k fan-out
 _PQ_TRAIN_MOD = 4  # deterministic training sample: vec_id % 4 == 0
 _PQ_TRAIN_ITERS = 3
 
@@ -862,9 +851,10 @@ def pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression-generated fold distances, and NOTHING shuffles until
     the final top-k. ADC cells quantize to BIGINT micro-units so each
     (query, vector) score is an exact integer sum — bit-equal to the
-    oracle regardless of aggregation order. Top-k per query runs the
-    two-stage salted window (per-salt top-k, then global top-k over
-    <= salts*k rows) so no single task ever sees the corpus.
+    oracle regardless of aggregation order. Top-k per query is
+    ``topk_per_group``: a partial ``WindowGroupLimit`` keeps k rows
+    per query per map task before the query_id exchange, so no single
+    task ever sees the corpus.
 
     At 100 TB: the code table is ~4 bytes/vector (10^4 x smaller than
     the float corpus), the ADC scan is embarrassingly parallel over
@@ -1003,7 +993,7 @@ def _pq_adc_score():
 def _pq_adc_topk(emb, emb_1t, cb_row) -> DataFrame:
     """Shared D24/D26 machinery: projection encode against the
     one-row ``cbs`` codebook relation (sampled or trained), integer
-    ADC scoring, two-stage salted top-k. Returns (query_id, rank,
+    ADC scoring, group-limited top-k. Returns (query_id, rank,
     vec_id, score_u)."""
     return _pq_adc_topk_from_codes(_pq_codes(emb, cb_row), emb_1t, cb_row)
 
@@ -1013,8 +1003,6 @@ def _pq_adc_topk_from_codes(codes, emb_1t, cb_row, qdf=None) -> DataFrame:
     inline-encoded or materialized. ``qdf`` (query_id, embedding)
     overrides the default probe set (the _PQ_NQ smallest vec_ids) —
     the D37b dial passes its wide probe slice."""
-    from pyspark.sql import Window
-
     if qdf is None:
         qdf = (
             emb_1t.orderBy("vec_id")
@@ -1028,32 +1016,22 @@ def _pq_adc_topk_from_codes(codes, emb_1t, cb_row, qdf=None) -> DataFrame:
         "vec_id",
         _pq_adc_score().alias("score_u"),
     )
-    salted = Window.partitionBy(
-        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
-    ).orderBy("score_u", "vec_id")
-    final = Window.partitionBy("query_id").orderBy("score_u", "vec_id")
-    return (
-        scored.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= _PQ_TOPK)
-        .withColumn("rank", F.row_number().over(final))
-        .where(F.col("rank") <= _PQ_TOPK)
-        .select("query_id", "rank", "vec_id", "score_u")
-    )
+    return topk_per_group(
+        scored, ["query_id"], [F.col("score_u"), F.col("vec_id")], _PQ_TOPK
+    ).select("query_id", "rank", "vec_id", "score_u")
 
 
 def _pq_exact_topk(
     emb_1t, qdf=None, k: int = _PQ_TOPK, exclude_self: bool = False
 ) -> DataFrame:
     """Exact L2 top-k per probe query (identical left-associated
-    64-term distance both engines, salted two-stage window). Returns
+    64-term distance both engines, group-limited window). Returns
     (query_id, vec_id). ``qdf`` (query_id, embedding) overrides the
     default probe set (the _PQ_NQ smallest vec_ids). ``exclude_self``
     drops the query's own corpus row BEFORE ranking (the D27
     discipline) — used by the D28b/D29b compound-recall dials so every
     reference neighbor is a real retrieval target, not the
     near-guaranteed self-hit (ADVICE r5)."""
-    from pyspark.sql import Window
-
     if qdf is None:
         qdf = (
             emb_1t.orderBy("vec_id")
@@ -1087,17 +1065,9 @@ def _pq_exact_topk(
     )
     if exclude_self:
         scored = scored.where(F.col("vec_id") != F.col("query_id"))
-    salted = Window.partitionBy(
-        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
-    ).orderBy("d", "vec_id")
-    final = Window.partitionBy("query_id").orderBy("d", "vec_id")
-    return (
-        scored.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= k)
-        .withColumn("r", F.row_number().over(final))
-        .where(F.col("r") <= k)
-        .select("query_id", "vec_id")
-    )
+    return topk_per_group(
+        scored, ["query_id"], [F.col("d"), F.col("vec_id")], k
+    ).select("query_id", "vec_id")
 
 
 # ---------------------------------------------------------------- D25
@@ -1152,7 +1122,7 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     round(L2², 6) with a vec_id tie-pin; both engines build the
     64-term distance as the identical left-associated sum of the 8
     subspace chains, so the rounded keys are bit-equal. Exact top-5
-    runs the same two-stage salted window as D24 (no task holds a
+    runs the same group-limited window as D24 (no task holds a
     query's corpus); the hit join and the final report are
     |queries|-sized. NOTE when comparing across the dial family: D25/
     D25b keep the query in the corpus (the self-row is a legitimate
@@ -1958,27 +1928,27 @@ def _ivfpq_serve(
     rebalance: bool = False,
 ) -> DataFrame:
     """The D28 serving tail over any index relation (inline-encoded or
-    materialized): probe-cell ranking, broadcast ADC tables, salted
-    two-stage top-k. ``k`` is the per-query cut (default the D28
+    materialized): probe-cell ranking, broadcast ADC tables,
+    group-limited top-k. ``k`` is the per-query cut (default the D28
     top-k; D28d passes its shortlist depth). ``cents``/``cells``
     override the trained artifacts — the incremental-index path
     serves with its FROZEN day-0 quantizers; defaults reproduce D28c
     unchanged.
 
-    ``rebalance`` re-hashes the candidate rows onto the salted top-k
-    keys BEFORE the ADC fold, so the fold computes post-shuffle on
-    evenly-hashed partitions and the first window stage REUSES the
-    exchange (no extra shuffle vs the default plan — the exchange
-    just moves below the fold and carries codes instead of scores).
+    ``rebalance`` hashes the candidate rows on (query_id, vec_id)
+    BEFORE the ADC fold, so the fold computes post-shuffle on
+    evenly-hashed partitions. That exchange carries skinny codes, not
+    scores; the top-k's ``query_id`` exchange after it carries only
+    the rows the partial ``WindowGroupLimit`` keeps (at most k per
+    query per task), so the extra shuffle moves candidates once and
+    the ranking shuffle stays |tasks|·|queries|·k rows.
     Use it when the index side's byte-based scan splits misestimate
     fold work — e.g. the one-file-per-cell compacted layout, where a
     hot probed cell rides one split: measured at the ×100 replicate
     (26.8M candidates, 190k live rows, 259 cells) the incremental
     serve drops 34.6 → ~12 s, matching D28c's many-files-per-cell
     accidental granularity. Results are identical by construction
-    (same rows, same fold, same windows)."""
-    from pyspark.sql import Window
-
+    (same rows, same fold, same window)."""
     if cents is None:
         cents = pq_train_codebook_cached(spark, sf_dir)
     if cells is None:
@@ -2002,32 +1972,21 @@ def _ivfpq_serve(
     adc = _pq_adc_table(qsel, cb_row)
     cand = F.broadcast(probe_cells).join(encoded, "cell_id")
     if rebalance:
-        # hash onto the salted-window keys while rows are still
-        # skinny (query_id, vec_id, codes) — the window below reuses
-        # this exchange, so the plan has the SAME number of shuffles
-        cand = cand.repartition(
-            F.col("query_id"), F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
-        )
+        # hash evenly on (query_id, vec_id) while rows are still
+        # skinny (query_id, vec_id, codes), so the ADC fold runs
+        # post-shuffle on even partitions; the query_id exchange of
+        # the top-k then carries only the group-limited rows
+        cand = cand.repartition("query_id", "vec_id")
     scored = cand.join(adc, "query_id").select(
         "query_id", "vec_id", _pq_adc_score().alias("score_u")
     )
-    salted = Window.partitionBy(
-        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
-    ).orderBy("score_u", "vec_id")
-    final = Window.partitionBy("query_id").orderBy("score_u", "vec_id")
-    return (
-        scored.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= k)
-        .withColumn("rank", F.row_number().over(final))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            (F.round(F.col("score_u") / 1e6, 6) + F.lit(0.0)).alias(
-                "adc_dist"
-            ),
-        )
+    return topk_per_group(
+        scored, ["query_id"], [F.col("score_u"), F.col("vec_id")], k
+    ).select(
+        "query_id",
+        "rank",
+        "vec_id",
+        (F.round(F.col("score_u") / 1e6, 6) + F.lit(0.0)).alias("adc_dist"),
     )
 
 
@@ -2058,7 +2017,7 @@ def ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast codebook AND its coarse cell against the broadcast
     centroid constants in the same select; serving broadcasts the
     probes×nprobe cell list and the per-query ADC tables against the
-    encoded corpus and runs the salted two-stage top-k. Nothing
+    encoded corpus and runs the group-limited top-k. Nothing
     corpus-sized ever shuffles before the final per-query cut. At
     100 TB this is the architecture: 4 bytes/vector of codes + a cell
     id, brute force only within probed cells. (This inline form
@@ -2247,8 +2206,6 @@ def ivfpq_exact_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors are touched for 30 rows/query regardless of corpus size;
     the exact distance is the integer micro-unit L2 (BIGINT,
     structural cross-engine equality, 1e-12 units like D29)."""
-    from pyspark.sql import Window
-
     cents = pq_train_codebook_cached(spark, sf_dir)
     if not cents or not cents[0]:
         return spark.createDataFrame(
@@ -2284,18 +2241,13 @@ def ivfpq_exact_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, v: acc + v,
         ).alias("d2u"),
     )
-    final = Window.partitionBy("query_id").orderBy("d2u", "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(final))
-        .where(F.col("rank") <= _IVFPQ_K)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            (F.round(F.col("d2u") / 1e12, 6) + F.lit(0.0)).alias(
-                "exact_dist"
-            ),
-        )
+    return topk_per_group(
+        scored, ["query_id"], [F.col("d2u"), F.col("vec_id")], _IVFPQ_K
+    ).select(
+        "query_id",
+        "rank",
+        "vec_id",
+        (F.round(F.col("d2u") / 1e12, 6) + F.lit(0.0)).alias("exact_dist"),
     )
 
 
@@ -2345,7 +2297,7 @@ def ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cells pruned by the coarse quantizer AND 4-bit code distortion) —
     read alongside D27 (cell pruning alone) and D25 (code distortion
     alone) to attribute recall loss to the right knob. Same hash-check
-    stack as its components; the exact side is the D25 salted L2
+    stack as its components; the exact side is the D25 exact L2
     reference over the D28 probe sample. Self-hits are EXCLUDED from
     both the exact reference and the candidates (the D27
     vec_id <> query_id discipline), so this dial is directly
@@ -2860,13 +2812,11 @@ def _rpq_serve(
     """The D29 serving tail over any index relation (inline-encoded or
     materialized): probe-cell ranking over the query residuals'
     coarse distances, per-(query, probed-cell) integer ADC tables,
-    salted two-stage top-k. Query-side residuals recompute from the
+    group-limited top-k. Query-side residuals recompute from the
     raw embeddings with the vec_id probe filter PUSHED INTO THE SCAN
     (|corpus|/mod rows, not the corpus), so serving cost is probe
     count × probed-cell occupancy regardless of where the index came
     from."""
-    from pyspark.sql import Window
-
     rcb_row = _rpq_cb_row(spark, _rpq_train(spark, sf_dir))
     cells_u = ivf_train_cells_cached(spark, sf_dir)
     # probe filter applied at the SCAN, then ONE Arrow pass emits the
@@ -2944,23 +2894,13 @@ def _rpq_serve(
         .join(adc, ["query_id", "cell_id"])
         .select("query_id", "vec_id", _pq_adc_score().alias("score_u"))
     )
-    salted = Window.partitionBy(
-        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
-    ).orderBy("score_u", "vec_id")
-    final = Window.partitionBy("query_id").orderBy("score_u", "vec_id")
-    return (
-        scored.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= _IVFPQ_K)
-        .withColumn("rank", F.row_number().over(final))
-        .where(F.col("rank") <= _IVFPQ_K)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            (F.round(F.col("score_u") / 1e12, 6) + F.lit(0.0)).alias(
-                "adc_dist"
-            ),
-        )
+    return topk_per_group(
+        scored, ["query_id"], [F.col("score_u"), F.col("vec_id")], _IVFPQ_K
+    ).select(
+        "query_id",
+        "rank",
+        "vec_id",
+        (F.round(F.col("score_u") / 1e12, 6) + F.lit(0.0)).alias("adc_dist"),
     )
 
 
@@ -2990,7 +2930,7 @@ def ivfpq_residual_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     table per (query, probed cell), still |queries|·nprobe·8·16
     integers, broadcast. Scale shape matches D28: residuals + codes +
     cells come from one shuffle-free projection per side; serving is
-    broadcast joins + the salted two-stage top-k. (This inline form
+    broadcast joins + the group-limited top-k. (This inline form
     re-encodes per run; D29c ``ivfpq_residual_ann_served``
     materializes the code table once and serves from it — identical
     rows, same oracle.)"""
@@ -3200,8 +3140,8 @@ def sq8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the bounds are one 128-value rollup (min+max per dim,
     map-side combinable) broadcast back as a constant; encoding is a
     shuffle-free projection (corpus never moves); serving broadcasts
-    the probe rows against the encoded corpus and runs the salted
-    two-stage top-k. Index size: 64 B/vector + one 128-number bounds
+    the probe rows against the encoded corpus and runs the
+    group-limited top-k. Index size: 64 B/vector + one 128-number bounds
     row — at 100 TB the byte codes are the only thing serving ever
     scans. (This inline form re-derives bounds and codes per run;
     D31c ``sq8_ann_served`` materializes them once — identical rows,
@@ -3268,8 +3208,6 @@ def _sq8_serve(
 ) -> DataFrame:
     """The D31 serving tail over any (vec_id, mns, mxs, codes)
     relation — inline-encoded or materialized."""
-    from pyspark.sql import Window
-
     e_1t = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     probes = F.broadcast(
         e_1t.orderBy("vec_id")
@@ -3295,21 +3233,13 @@ def _sq8_serve(
             ")".format(d=_EMBED_DIMS - 1)
         ).alias("score_su"),
     )
-    salted = Window.partitionBy(
-        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
-    ).orderBy("score_su", "vec_id")
-    final = Window.partitionBy("query_id").orderBy("score_su", "vec_id")
-    return (
-        scored.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= _PQ_TOPK)
-        .withColumn("rank", F.row_number().over(final))
-        .where(F.col("rank") <= _PQ_TOPK)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            F.col("score_su").cast("long").alias("score_su"),
-        )
+    return topk_per_group(
+        scored, ["query_id"], [F.col("score_su"), F.col("vec_id")], _PQ_TOPK
+    ).select(
+        "query_id",
+        "rank",
+        "vec_id",
+        F.col("score_su").cast("long").alias("score_su"),
     )
 
 
@@ -3417,9 +3347,7 @@ def mips_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: integer micro-unit dot products, descending-score
     rank with vec_id tie-pins — every ranking key is an exact BIGINT.
     Scale shape: broadcast probe rows against the corpus scan (the
-    corpus never shuffles), salted two-stage top-k."""
-    from pyspark.sql import Window
-
+    corpus never shuffles), group-limited top-k."""
     e = table(spark, sf_dir, "embeddings", fan_out="force").select(
         "vec_id", "embedding"
     )
@@ -3449,23 +3377,16 @@ def mips_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", dot.alias("score_u"))
     )
-    salted = Window.partitionBy(
-        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
-    ).orderBy(F.col("score_u").desc(), "vec_id")
-    final = Window.partitionBy("query_id").orderBy(
-        F.col("score_u").desc(), "vec_id"
-    )
-    return (
-        scored.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= _PQ_TOPK)
-        .withColumn("rank", F.row_number().over(final))
-        .where(F.col("rank") <= _PQ_TOPK)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            F.col("score_u").cast("long").alias("score_u"),
-        )
+    return topk_per_group(
+        scored,
+        ["query_id"],
+        [F.col("score_u").desc(), F.col("vec_id")],
+        _PQ_TOPK,
+    ).select(
+        "query_id",
+        "rank",
+        "vec_id",
+        F.col("score_u").cast("long").alias("score_u"),
     )
 
 

@@ -781,51 +781,6 @@ def _lsh_sweep_oracle() -> str:
     """
 
 
-def _sweep_cap_buckets(banded: DataFrame, max_bucket: int) -> DataFrame:
-    """operators.dedup._cap_buckets over the combined multi-setting
-    band relation: the window partition keys gain the ``bands``
-    setting column (buckets of different settings never mix), while
-    the per-bucket selection hash stays the byte-identical
-    md5_31('lshcap:'||band_id||':'||band_hash||':'||id) — so each
-    setting's kept members equal the per-setting capped plan's."""
-    from pyspark.sql import Window
-
-    from spotify_podcasts_airflow_batch_spark.functions.hashing import (
-        md5_hash31,
-    )
-    from spotify_podcasts_airflow_batch_spark.operators.dedup import (
-        _LSH_CAP_SALTS,
-    )
-
-    hk = md5_hash31(
-        F.concat(
-            F.lit("lshcap:"),
-            F.col("band_id").cast("string"),
-            F.lit(":"),
-            F.col("band_hash").cast("string"),
-            F.lit(":"),
-            F.col("doc_id").cast("string"),
-        )
-    )
-    salted = Window.partitionBy(
-        "bands",
-        "band_id",
-        "band_hash",
-        F.pmod(F.col("doc_id"), F.lit(_LSH_CAP_SALTS)),
-    ).orderBy("__hk", "doc_id")
-    final = Window.partitionBy("bands", "band_id", "band_hash").orderBy(
-        "__hk", "doc_id"
-    )
-    return (
-        banded.withColumn("__hk", hk)
-        .withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= max_bucket)
-        .withColumn("__rn", F.row_number().over(final))
-        .where(F.col("__rn") <= max_bucket)
-        .drop("__hk", "__srn", "__rn")
-    )
-
-
 @register("lsh_param_sweep", oracle=_lsh_sweep_oracle())
 def lsh_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C61 — the LSH banding dial: candidate volume, precision, and
@@ -911,9 +866,18 @@ def lsh_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     cand = _pairs(banded)
-    candc = _pairs(_sweep_cap_buckets(banded, _SWEEP_CAP))
     from spotify_podcasts_airflow_batch_spark.operators.dedup import (
+        _cap_buckets,
         _shingle_pair_counts,
+    )
+
+    candc = _pairs(
+        _cap_buckets(
+            banded,
+            "doc_id",
+            _SWEEP_CAP,
+            group_cols=("bands", "band_id", "band_hash"),
+        )
     )
 
     truth = (

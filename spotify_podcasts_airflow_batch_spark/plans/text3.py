@@ -20,6 +20,9 @@ from spotify_podcasts_airflow_batch_spark.functions.text import (
     tokens,
     word_shingles,
 )
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    topk_per_group,
+)
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
@@ -494,12 +497,9 @@ def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     kd = d.select(
         "doc_id", "source", "n_chars", (F.log(u) / F.col("n_chars")).alias("k")
     )
-    w = Window.partitionBy("source").orderBy(F.col("k").desc(), "doc_id")
-    return (
-        kd.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-        .select("doc_id", "source", "n_chars")
-    )
+    return topk_per_group(
+        kd, ["source"], [F.col("k").desc(), F.col("doc_id")], 5
+    ).select("doc_id", "source", "n_chars")
 
 
 # ---------------------------------------------------------------- C48

@@ -25,6 +25,9 @@ from spotify_podcasts_airflow_batch_spark.functions.stats import (
     anova_tail,
     anova_tail_sql,
 )
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    topk_per_group,
+)
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
 from spotify_podcasts_airflow_batch_spark.plans.events import window_start
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
@@ -159,10 +162,9 @@ def user_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-user state is capped at 5 rows before the path groupBy, so
     the second shuffle carries one short string per user."""
     ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ranked = ev.select(
-        "user_id", "event_type", F.row_number().over(w).alias("rn")
-    ).where(F.col("rn") <= 5)
+    ranked = topk_per_group(
+        ev, ["user_id"], [F.col("ts"), F.col("event_id")], 5, "rn"
+    ).select("user_id", "event_type", "rn")
     paths = ranked.groupBy("user_id").agg(
         F.array_join(
             F.transform(

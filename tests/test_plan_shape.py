@@ -34,6 +34,26 @@ def plan_of(spark, sf_dir, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def assert_group_limited_topk(plan: str, *keys: str) -> None:
+    """The per-group top-k shape of ``operators.ranking.topk_per_group``:
+    exactly one hash exchange on the group ``keys``, whose direct child
+    is a ``WindowGroupLimit`` in ``Partial`` mode — each map task keeps
+    at most k rows per group before the shuffle, so no task ever holds
+    a group's whole input — and no ``pmod`` salt anywhere."""
+    on_keys = re.compile(
+        r"Exchange hashpartitioning\("
+        + "".join(rf"{k}#\w+, " for k in keys)
+        + r"\d+\)"
+    )
+    lines = plan.splitlines()
+    at = [i for i, ln in enumerate(lines) if on_keys.search(ln)]
+    assert len(at) == 1, [lines[i] for i in at]
+    child = lines[at[0] + 1].strip()
+    assert child.startswith("+- WindowGroupLimit"), child
+    assert child.endswith("Partial"), child
+    assert "pmod" not in plan
+
+
 def test_q1_filter_pushed_to_scan(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "q1_pricing_summary")
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
@@ -184,11 +204,13 @@ def test_doc_quality_score_no_shuffle_no_python(spark, sf_dir):
     assert "*(1)" in plan  # whole-stage codegen span
 
 
-def test_domain_quota_cap_broadcasts_group_list(spark, sf_dir):
-    """C39: the over-quota group list rides broadcast joins (semi +
-    anti) — the fact is never shuffled to find its group's size."""
+def test_domain_quota_cap_group_limited_before_shuffle(spark, sf_dir):
+    """C39: the quota cap is one group-limited window — a partial
+    WindowGroupLimit keeps Q docs per (source, lang) per map task
+    below the single group-key exchange, so a hot domain never sorts
+    on one task."""
     plan = plan_of(spark, sf_dir, "domain_quota_cap")
-    assert plan.count("BroadcastHashJoin") >= 2
+    assert_group_limited_topk(plan, "source", "lang")
     assert "SortMergeJoin" not in plan
 
 
@@ -413,29 +435,41 @@ def test_containment_self_join_not_hint_pinned(spark, sf_dir):
 def test_pq_adc_encoding_is_shuffle_free(spark, sf_dir):
     """PQ-ADC's encode + score phases must be pure projections (the
     codebook and ADC tables ride as broadcasts): the ONLY hash
-    exchanges allowed are the two top-k window stages (the first
-    salted so no task ever holds a query's full corpus) plus the
-    under-parallel-layout staging exchange the single-row-group
-    testdata needs (fan_out="force"; a no-op on multi-group layouts).
+    exchanges allowed are the top-k's query_id exchange (with a
+    partial WindowGroupLimit beneath it, so no task ever holds a
+    query's full corpus) plus the under-parallel-layout staging
+    exchange the single-row-group testdata needs (fan_out="force"; a
+    no-op on multi-group layouts).
     """
-    import re
-
     plan = plan_of(spark, sf_dir, "pq_adc_ann")
     hash_exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    assert len(hash_exchanges) <= 3
-    # the salted stage partitions by (query_id, salt), the final by
-    # query_id alone — both must be present
-    assert any("query_id" in k and "," in k.rsplit(", ", 1)[0]
-               for k in hash_exchanges)
-    assert any("query_id" in k and "," not in k.rsplit(", ", 1)[0]
-               for k in hash_exchanges)
+    assert len(hash_exchanges) <= 2
+    assert_group_limited_topk(plan, "query_id")
     assert "SortMergeJoin" not in plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "sq8_ann_served",
+        "ivfpq_ann_served",
+        "ivfpq_residual_ann_served",
+        "mips_brute",
+        "opq_ann",
+    ],
+)
+def test_ann_topk_group_limited_before_query_shuffle(spark, sf_dir, name):
+    """The vector-search top-k (sq8_ann_served is the search key the
+    query_serve benchmark runs) is one ``topk_per_group`` window: one
+    query_id exchange carrying only the rows a partial WindowGroupLimit
+    kept, no (query_id, salt) first stage."""
+    assert_group_limited_topk(plan_of(spark, sf_dir, name), "query_id")
 
 
 def test_ivfpq_index_build_never_shuffles_corpus(spark, sf_dir):
     # D28's claim: the index build (PQ codes + coarse cell) is one
     # shuffle-free projection against broadcast constants; serving is
-    # broadcast joins + the salted top-k. No corpus-sized sort-merge
+    # broadcast joins + the group-limited top-k. No corpus-sized sort-merge
     # join, no cartesian, anywhere.
     plan = plan_of(spark, sf_dir, "ivfpq_ann")
     assert "SortMergeJoin" not in plan
@@ -454,7 +488,7 @@ def test_capped_cosine_materializes_baskets_once(spark, sf_dir):
 
 def test_residual_ivfpq_never_shuffles_corpus_joins(spark, sf_dir):
     # D29 mirrors D28's serving shape: broadcast probe/ADC joins onto
-    # the encoded corpus, salted top-k — no sort-merge, no cartesian.
+    # the encoded corpus, group-limited top-k — no sort-merge, no cartesian.
     plan = plan_of(spark, sf_dir, "ivfpq_residual_ann")
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -465,7 +499,7 @@ def test_sq8_encoding_never_shuffles_corpus(spark, sf_dir):
     a broadcast nested loop — the corpus must reach scoring without a
     single hash/range exchange of its own rows (the fan_out staging
     repartition is the one permitted exchange). The only sort-bearing
-    exchanges are the salted top-k windows over SCORED rows."""
+    exchange is the group-limited top-k window over SCORED rows."""
     plan = plan_of(spark, sf_dir, "sq8_ann")
     assert "SortMergeJoin" not in plan
     # serving joins are broadcast (probes, bounds)
@@ -707,7 +741,7 @@ def test_grid_quantile_single_partitions_are_value_sized(spark, sf_dir):
 def test_opq_serves_like_pq_no_corpus_shuffle(spark, sf_dir):
     """D37 inherits D24's serving shape: rotation is a projection,
     encode is a map pass against broadcast constants, the only hash
-    exchanges are the salted/final top-k windows — no sort-merge, no
+    exchange is the group-limited top-k window — no sort-merge, no
     cartesian, no single-partition stage."""
     plan = plan_of(spark, sf_dir, "opq_ann")
     assert "SortMergeJoin" not in plan

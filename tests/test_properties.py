@@ -6,7 +6,7 @@ example is adversarially generated."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 SETTINGS = dict(
@@ -117,22 +117,37 @@ _grp_rows = st.lists(
 
 
 @given(rows=_grp_rows, quota=st.integers(min_value=1, max_value=5))
+@example(rows=[], quota=1)  # empty input
+@example(rows=[(0, 5)] * 30 + [(1, 5), (2, 4)], quota=2)  # skew + ties
 @settings(**SETTINGS)
 def test_capped_top_q_equals_plain_window(spark, rows, quota):
-    """C39's salted two-stage quota cap is exactly a row_number window
-    + filter for ANY input: groups at/below/above quota, heavy ties in
-    the score, single-group skew, empty input."""
+    """Every per-group top-k in operators/ranking is exactly a
+    row_number window + filter for ANY input: groups at/below/above
+    quota, heavy ties in the score, single-group skew, empty input.
+    C39's salted two-stage ``capped_top_q``, the group-limited
+    ``topk_per_group`` (positions included) and ``latest_per_key``
+    (the k = 1 cut) all run on the same inputs."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from spotify_podcasts_airflow_batch_spark.operators.ranking import (
         capped_top_q,
+        latest_per_key,
+        topk_per_group,
     )
 
     df = spark.createDataFrame(
         [(g, s, i) for i, (g, s) in enumerate(rows)], "g long, s long, id long"
     )
     order = [F.col("s").desc(), F.col("id")]
+    w = Window.partitionBy("g").orderBy(*order)
+    ranked = [
+        (r.g, r.s, r.id, r.rn)
+        for r in df.withColumn("rn", F.row_number().over(w)).collect()
+    ]
+    want = sorted(t for t in ranked if t[3] <= quota)
+    want_latest = sorted(t[:3] for t in ranked if t[3] == 1)
+
     got = sorted(
         (r.g, r.s, r.id)
         for r in capped_top_q(
@@ -140,15 +155,16 @@ def test_capped_top_q_equals_plain_window(spark, rows, quota):
             salt_source=F.col("id"), salts=3,
         ).collect()
     )
-    w = Window.partitionBy("g").orderBy(*order)
-    want = sorted(
-        (r.g, r.s, r.id)
-        for r in df.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= quota)
-        .drop("rn")
-        .collect()
+    assert got == [t[:3] for t in want]
+    got_topk = sorted(
+        (r.g, r.s, r.id, r.rank)
+        for r in topk_per_group(df, ["g"], order, quota).collect()
     )
-    assert got == want
+    assert got_topk == want
+    got_latest = sorted(
+        tuple(r) for r in latest_per_key(df, ["g"], order).collect()
+    )
+    assert got_latest == want_latest
 
 
 _events = st.lists(
